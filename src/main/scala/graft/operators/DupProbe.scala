@@ -19,7 +19,10 @@ import org.apache.spark.sql.functions._
   * with a session-scoped memo — the same device as TextAnalysis
   * .twinClasses — keyed by the probe plan's semantic hash, so every
   * query family over the same (frame, content-key) pays the scan once
-  * per session.
+  * per session. The exception is Extended.similarityJoinP2: it probes
+  * its own freshly pinned input on each call, and a new checkpoint has
+  * a new plan hash, so its probe runs (a scan of the pinned blocks) and
+  * adds one memo entry per call.
   *
   * Safety of memoizing (and of the Int-hash key): for the VALVES, the
   * dup factor only chooses BETWEEN two branches that produce

@@ -1,7 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
@@ -225,6 +229,39 @@ class PlanShapeSpec extends SparkSpec {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
     }.size
     assert(exchanges === 0, s"featurize must be map-only, got $exchanges")
+  }
+
+  test("q_similarity_join_p2: one documents scan and one round-robin " +
+    "exchange, over (doc_id, text), serve the dup probe AND the join") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      // the call runs the input build and the dup probe; collect the join
+      query("q_similarity_join_p2").collect()
+      org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // AdaptiveSparkPlanHelper descends into AQE's final plans and stages
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val all = plans.toArray(Array.empty[SparkPlan]).toSeq
+    val docScans = all.flatMap(p => aqe.collect(p) {
+      case sc: FileSourceScanExec if sc.relation.location.rootPaths
+        .exists(_.toString.contains("documents")) => sc
+    })
+    assert(docScans.size === 1, s"documents scans=${docScans.size}")
+    val roundRobin = all.flatMap(p => aqe.collect(p) {
+      case e: ShuffleExchangeExec
+        if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+    })
+    assert(roundRobin.size === 1, s"round-robin exchanges=${roundRobin.size}")
+    val moved = roundRobin.head.child.output.map(_.name)
+    assert(moved === Seq("doc_id", "text"), s"exchange child output=$moved")
   }
 
   test("multisetPairs pair-mass gate (r15, pinned r16): fires past " +

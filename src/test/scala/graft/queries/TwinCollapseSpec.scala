@@ -122,15 +122,9 @@ class TwinCollapseSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sortBy(p => (p._1, p._2)).toSeq
     val got = rows(Extended.similarityJoinP2(spark, dir))
-    // the direct path, reconstructed exactly (same seeded sample, same
-    // prep, same reference-shape operator)
-    val d = graft.sources.Tables.documents(spark, dir)
-      .sample(0.5, 12345L)
-      .select($"doc_id", TextAnalysis.toks($"text").as("t"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .select($"doc_id",
-        array_distinct(TextAnalysis.bigramShingles($"t")).as("sh"))
-      .filter(size($"sh") > 0)
+    // the direct path over the query's own input (same seeded sample,
+    // same prep), through the reference-shape operator
+    val d = Extended.p2Input(spark, dir)
     val tf = new org.apache.spark.ml.feature.HashingTF()
       .setInputCol("sh").setOutputCol("tf")
       .setNumFeatures(4096).transform(d)
